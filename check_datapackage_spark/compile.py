@@ -20,7 +20,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .functions import string_format_ok, type_conforms
+from .functions import quoted_col, string_format_ok, type_conforms
 from .spec import Constraints, FieldSpec, TableSpec
 
 
@@ -76,7 +76,7 @@ def compile_field_checks(
     :func:`schema_conforms` (driver-side, zero data cost) instead.
     """
     c = field.constraints
-    col = F.col(field.name)
+    col = quoted_col(field.name)
     checks: list[CompiledCheck] = []
     inst = col.cast("string")
 
@@ -1093,13 +1093,22 @@ def compile_json_schema_checks(
     fuse into the single-scan violations plan like every other
     constraint.
 
+    Contract: the returned checks' ``ok`` columns read shared slot
+    columns (:attr:`CompiledCheck.lets`) that are not in the input.
+    :func:`check_table`, :func:`violations_plan`, :func:`summary_plan`
+    and the streaming builders add them; any other consumer must call
+    ``df = bind_check_lets(df, checks)`` before selecting ``ok`` or
+    ``instance``. Slot names are unique per (field, schema), so checks
+    from several calls may be bound together.
+
     Reference semantics: jsonschema.Draft7Validator over the constraint
     sub-schemas in data-package-2-0.json (SURVEY §1.4).
     """
     import hashlib
+    import json
 
     js = resolve_refs(field.constraints.json_schema or {})
-    col = F.col(field.name)
+    col = quoted_col(field.name)
     checks: list[CompiledCheck] = []
     inst = col.cast("string")
 
@@ -1110,9 +1119,12 @@ def compile_json_schema_checks(
     # checks — the previous per-check let-binding still re-parsed the
     # JSON once per check per row (13x/row on q38; variant exprs are
     # interpreted, no codegen CSE). Names are md5-scoped to the field
-    # so multi-JSON-field tables can't collide; unused slots are pruned
-    # by Catalyst's column pruning.
-    fkey = "js" + hashlib.md5(field.name.encode()).hexdigest()[:8]
+    # AND the resolved schema: slot indices follow the schema's paths,
+    # so two schemas on one field (a spec check plus an extra_checks
+    # entry) must not share names. Unused slots are pruned by
+    # Catalyst's column pruning.
+    scope = json.dumps([field.name, js], sort_keys=True, default=str)
+    fkey = "js" + hashlib.md5(scope.encode()).hexdigest()[:8]
     vname = f"__{fkey}_v"
     lets_layers: tuple = ({}, {}, {}, {})
     _path_slots: dict = {}

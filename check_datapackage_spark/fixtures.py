@@ -183,6 +183,7 @@ def token_invariant_checks():
     """The BASELINE per-row token-array invariant as compiled checks:
     ``size(tokens) == n_tok`` and every element in [0, VOCAB)."""
     from .compile import compile_invariant
+    from .functions import array_range_ok
 
     return [
         compile_invariant(
@@ -197,11 +198,7 @@ def token_invariant_checks():
         ),
         compile_invariant(
             name="tokens.element_range",
-            ok=F.col("tokens").isNull()
-            | F.forall(
-                "tokens",
-                lambda t: t.isNotNull() & (t >= 0) & (t < VOCAB),
-            ),
+            ok=array_range_ok(F.col("tokens"), 0, VOCAB - 1),
             issue_type="type",
             message=f"token values must be non-null ints in [0, {VOCAB})",
             column="tokens",

@@ -21,6 +21,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import unpivot
+
 
 def snapshot_diff(
     old: DataFrame,
@@ -66,24 +68,22 @@ def snapshot_diff(
                 "long"
             )
         ).alias("n_removed"),
-        *[
-            F.sum(
-                (both & ~F.col(f"_o_{c}").eqNullSafe(F.col(f"_n_{c}"))).cast(
-                    "long"
+        F.array(
+            *[
+                F.sum(
+                    (both & ~F.col(f"_o_{c}").eqNullSafe(F.col(f"_n_{c}"))).cast(
+                        "long"
+                    )
                 )
-            ).alias(f"_chg_{c}")
-            for c in cols
-        ],
+                for c in cols
+            ]
+        ).alias("_chg"),
     )
     # unpivot the per-column change counts: |columns| rows out
-    stack = F.expr(
-        "stack({n}, {args}) AS (column, n_changed)".format(
-            n=len(cols),
-            args=", ".join(f"'{c}', _chg_{c}" for c in cols),
-        )
-    )
-    return agg.select("n_common", "n_added", "n_removed", stack).select(
-        "column", "n_common", "n_added", "n_removed", "n_changed"
+    keep = ["n_common", "n_added", "n_removed"]
+    labels = [{"column": c} for c in cols]
+    return unpivot(agg, keep, "_chg", labels, "n_changed").select(
+        "column", *keep, "n_changed"
     )
 
 

@@ -12,8 +12,8 @@ Reference parity: the reference validates field values one constraint
 at a time (check.py check_data); this lifts the same per-row
 pass/fail + per-check counts contract onto token arrays.
 
-Scale shape: all four predicates are JVM higher-order expressions over
-the let-bound array (one evaluation per row, see text.let_col), fused
+Scale shape: all four predicates are JVM array expressions over the
+let-bound array (one evaluation per row, see text.let_col), fused
 into ONE aggregation with map-side combine — zero extra shuffles at
 any corpus size, no UDFs.
 """
@@ -23,7 +23,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import array_range_ok
 from .text import let_col
+
+
+def _interior_pads(t: Column, first: Column, last: Column, pad: int) -> Column:
+    """PAD count of ``t`` minus the PADs at its endpoints; codegen
+    ``array_remove`` instead of an interpreted ``filter`` lambda."""
+    return (
+        F.size(t)
+        - F.size(F.array_remove(t, pad))
+        - F.coalesce((first == pad).cast("int"), F.lit(0))
+        - F.coalesce((last == pad).cast("int"), F.lit(0))
+    )
 
 
 def structure_flags(
@@ -38,7 +50,8 @@ def structure_flags(
 
     ``pad_interior`` counts pads then discounts the endpoints (works
     for any array length without slicing, and replays exactly in SQL);
-    ``oov`` is any id outside ``[0, max_id]``. The array expression is
+    ``oov`` is any non-null id outside ``[0, max_id]`` (false, not NULL,
+    for null ids and NULL arrays). The array expression is
     let-bound so callers can pass a CONSTRUCTED array (e.g. a planted
     corruption) without paying one re-evaluation per predicate.
 
@@ -52,19 +65,11 @@ def structure_flags(
     def flags_of(t: Column) -> Column:
         first = F.try_element_at(t, F.lit(1))
         last = F.try_element_at(t, F.lit(-1))
-        n_pad = F.size(F.filter(t, lambda x: x == F.lit(pad)))
-        interior_pads = (
-            n_pad
-            - F.coalesce((first == pad).cast("int"), F.lit(0))
-            - F.coalesce((last == pad).cast("int"), F.lit(0))
-        )
         return F.struct(
             F.coalesce(first != bos, F.lit(True)).alias("missing_bos"),
             F.coalesce(last != eos, F.lit(True)).alias("bad_eos"),
-            (interior_pads > 0).alias("pad_interior"),
-            F.exists(
-                t, lambda x: (x < F.lit(0)) | (x > F.lit(max_id))
-            ).alias("oov"),
+            (_interior_pads(t, first, last, pad) > 0).alias("pad_interior"),
+            (~array_range_ok(t, 0, max_id, null_elements_ok=True)).alias("oov"),
         )
 
     return let_col(tokens, flags_of)
@@ -119,12 +124,7 @@ def structure_checks(
     t = F.col(column)
     first = F.try_element_at(t, F.lit(1))
     last = F.try_element_at(t, F.lit(-1))
-    n_pad = F.size(F.filter(t, lambda x: x == F.lit(pad)))
-    interior_pads = (
-        n_pad
-        - F.coalesce((first == pad).cast("int"), F.lit(0))
-        - F.coalesce((last == pad).cast("int"), F.lit(0))
-    )
+    interior_pads = _interior_pads(t, first, last, pad)
     null_ok = t.isNull()
     return [
         compile_invariant(
@@ -153,8 +153,8 @@ def structure_checks(
         ),
         compile_invariant(
             name=f"{column}.in_vocab",
-            ok=null_ok
-            | ~F.exists(t, lambda x: (x < F.lit(0)) | (x > F.lit(max_id))),
+            # null ids pass, as under NOT exists(t, x -> x < 0 OR x > max_id)
+            ok=array_range_ok(t, 0, max_id, null_elements_ok=True),
             issue_type="structure",
             message=f"token ids must be in [0, {max_id}]",
             column=column,

@@ -23,6 +23,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import quoted_col, unpivot
+
 
 def _is_numeric(df: DataFrame, col: str) -> bool:
     t = dict(df.dtypes)[col]
@@ -45,13 +47,13 @@ def profile_aggs(
     columns = list(columns or df.columns)
     aggs: list[Column] = [F.count(F.lit(1)).alias("n_rows")]
     for c in columns:
-        col = F.col(c)
+        col = quoted_col(c)
         aggs.append(F.sum(col.isNull().cast("long")).alias(f"{c}__n_null"))
-        aggs.append(F.approx_count_distinct(c).alias(f"{c}__approx_distinct"))
+        aggs.append(F.approx_count_distinct(col).alias(f"{c}__approx_distinct"))
         if _is_numeric(df, c):
-            aggs.append(F.min(c).alias(f"{c}__min"))
-            aggs.append(F.max(c).alias(f"{c}__max"))
-            aggs.append(F.avg(c).alias(f"{c}__mean"))
+            aggs.append(F.min(col).alias(f"{c}__min"))
+            aggs.append(F.max(col).alias(f"{c}__max"))
+            aggs.append(F.avg(col).alias(f"{c}__mean"))
             qf = F.percentile(col, F.lit(list(quantiles))) if exact_quantiles else (
                 F.percentile_approx(col, F.lit(list(quantiles)), F.lit(10000))
             )
@@ -80,24 +82,18 @@ def profile(
 def null_rates(df: DataFrame, columns: Optional[Sequence[str]] = None, by: Optional[str] = None) -> DataFrame:
     """Long-form null rates: (column, n_rows, n_null, null_rate)[ + by].
 
-    Same single scan; the unpivot is a ``stack`` over the finished
+    Same single scan; the unpivot runs over the finished
     aggregate (tiny), not over the data.
     """
     columns = list(columns or df.columns)
     group = [by] if by else []
-    aggs = [F.count(F.lit(1)).alias("n_rows")] + [
-        F.sum(F.col(c).isNull().cast("long")).alias(f"_n{i}")
-        for i, c in enumerate(columns)
-    ]
-    wide = df.groupBy(*group).agg(*aggs)
-    stack = ", ".join(f"'{c}', _n{i}" for i, c in enumerate(columns))
-    return (
-        wide.selectExpr(
-            *group,
-            "n_rows",
-            f"stack({len(columns)}, {stack}) as (column, n_null)",
-        )
-        .withColumn("null_rate", F.col("n_null") / F.col("n_rows"))
+    nulls = [F.sum(quoted_col(c).isNull().cast("long")) for c in columns]
+    wide = df.groupBy(*group).agg(
+        F.count(F.lit(1)).alias("n_rows"), F.array(*nulls).alias("_nulls")
+    )
+    labels = [{"column": c} for c in columns]
+    return unpivot(wide, group + ["n_rows"], "_nulls", labels, "n_null").withColumn(
+        "null_rate", F.col("n_null") / F.col("n_rows")
     )
 
 

@@ -83,10 +83,11 @@ def nested_violations(
         )
         elems.append(F.when(~ck.ok, struct))
 
-    arr = F.array_compact(F.array(*elems))
+    # explode, then drop the NULLs of passing checks: array_compact
+    # would become an interpreted filter(..., isnotnull) lambda and
+    # take the Generate out of whole-stage codegen
     return (
-        elem_fields.select(arr.alias("_v"))
-        .where(F.size("_v") > 0)
-        .select(F.explode("_v").alias("v"))
+        elem_fields.select(F.explode(F.array(*elems)).alias("v"))
+        .where(F.col("v").isNotNull())
         .select([F.col(f"v.{c}").alias(c) for c in VIOLATION_COLUMNS])
     )

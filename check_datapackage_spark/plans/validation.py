@@ -5,14 +5,21 @@ The reference walks the JSON document once and collects ALL violations
 does the table analog in one scan:
 
 * **violations**: every compiled check becomes a
-  ``when(~ok, struct(...))`` element of one array; ``filter`` + one
-  ``explode`` yields violation rows. No shuffle, no Python — the whole
-  expression runs inside whole-stage codegen, and Catalyst prunes the
-  scan down to exactly the checked columns.
+  ``when(~ok, i).otherwise(-1)`` element of one array of check indices;
+  ``array_remove(-1)`` + one ``explode`` yields violation rows, and the
+  payload is built on violating rows only. No shuffle, no Python, and
+  Catalyst prunes the scan down to exactly the checked columns. The
+  scan and the ``Generate`` run inside whole-stage codegen as long as
+  every ``ok`` predicate supports codegen; one interpreted predicate
+  (a higher-order-function lambda such as ``forall``, or the variant
+  expressions of jsonSchema checks) takes the ``Generate`` out of it.
+  Array checks on hot columns therefore use codegen kernels such as
+  :func:`functions.array_range_ok`.
 * **summary**: one ``groupBy(partition).agg`` of
   ``sum(when(~ok, 1))`` per check — the per-partition pass/fail matrix.
   Partial aggregation (map-side combine) makes this one light shuffle of
-  |partitions| × |checks| longs regardless of table size.
+  |partitions| × |checks| longs regardless of table size. The same
+  codegen rule applies to its partial aggregate.
 
 Never ``limit`` violations (mirror the reference's no-short-circuit
 rule, SURVEY §4); optionally cap *persisted examples* per check with a
@@ -29,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..compile import CompiledCheck
+from ..functions import quoted_col, unpivot
 from ..issue import VIOLATION_COLUMNS, finalize_violations
 from ..spec import CheckConfig, Exclusion, TableSpec
 
@@ -39,8 +47,9 @@ def bind_check_lets(df: DataFrame, checks: Sequence[CompiledCheck]) -> DataFrame
 
     Layer ``i`` may reference layer ``i-1``'s names (e.g. a variant
     type-tag column over the materialized extraction column), so each
-    layer is its own ``withColumns``. Names are field-scoped by the
-    compiler, so merging across checks/fields is collision-free, and
+    layer is its own ``withColumns``. Names are scoped by the compiler
+    to (field, schema), so merging across checks, fields and compile
+    calls is collision-free, and
     Catalyst's column pruning drops any slot the surviving checks don't
     reference — over-registration costs nothing at runtime."""
     layers: list[dict] = []
@@ -93,10 +102,10 @@ def violations_plan(
     if row_key is None:
         key_col = F.monotonically_increasing_id().cast("string")
     elif isinstance(row_key, (list, tuple)):
-        key_col = F.concat_ws("|", *[F.col(k).cast("string") for k in row_key])
+        key_col = F.concat_ws("|", *[quoted_col(k).cast("string") for k in row_key])
     else:
-        key_col = F.col(row_key)
-    part_col = F.col(partition).cast("string") if partition else F.lit(None).cast("string")
+        key_col = quoted_col(row_key)
+    part_col = quoted_col(partition).cast("string") if partition else F.lit(None).cast("string")
 
     # The per-row work is ONLY the ok predicates: the array carries the
     # indices of failing checks (array<int>), nothing else. All payload
@@ -107,8 +116,13 @@ def violations_plan(
     # row inside one giant interpreted expression (variant checks
     # disable codegen): q38 measured 14.2 s per execution vs ~2 s with
     # this emission at sf0.1.
-    elems = [F.when(~ck.ok, F.lit(i)) for i, ck in enumerate(checks)]
-    arr = F.array_compact(F.array(*elems))
+    # Passing checks yield -1, dropped by array_remove. Not
+    # array_compact over NULLs: Spark rewrites it to
+    # filter(..., isnotnull), an interpreted higher-order function that
+    # keeps the Generate out of whole-stage codegen.
+    # (plain ints: the literals are made JVM-side, no py4j call each)
+    elems = [F.when(~ck.ok, i).otherwise(-1) for i, ck in enumerate(checks)]
+    arr = F.array_remove(F.array(*elems), -1)
 
     # Columns the post-explode payload references: derived from the
     # ``instance`` expressions THEMSELVES (one driver-side analysis of
@@ -129,7 +143,7 @@ def violations_plan(
     exploded = df.select(
         key_col.cast("string").alias("_k"),
         part_col.alias("_p"),
-        *[F.col(c) for c in carry],
+        *[quoted_col(c) for c in carry],
         F.explode(arr).alias("_ci"),
     )
 
@@ -236,7 +250,7 @@ def summary_plan(
     Output: (partition, check, column, type, n_rows, fail_count, passed)
     — long form, one row per (partition, check). The wide agg happens
     first (one shuffle of tiny partial aggregates), then a driver-free
-    ``stack`` unpivot.
+    :func:`functions.unpivot`.
     """
     if not checks:
         return df.sparkSession.createDataFrame(
@@ -248,25 +262,21 @@ def summary_plan(
         ).drop(*([] if partition else ["partition"]))
 
     df = bind_check_lets(df, checks)
-    group = [F.col(partition).cast("string").alias("partition")] if partition else []
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for i, ck in enumerate(checks):
-        aggs.append(
-            F.sum(F.when(~ck.ok, F.lit(1)).otherwise(F.lit(0))).alias(f"_c{i}")
-        )
-    wide = df.groupBy(*group).agg(*aggs)
+    group = [quoted_col(partition).cast("string").alias("partition")] if partition else []
+    fails = [F.sum(F.when(~ck.ok, 1).otherwise(0)) for ck in checks]
+    wide = df.groupBy(*group).agg(
+        F.count(F.lit(1)).alias("n_rows"), F.array(*fails).alias("_fails")
+    )
 
-    # unpivot via stack — stays distributed, no collect
-    n = len(checks)
-    stack_args = []
-    for i, ck in enumerate(checks):
-        stack_args.append(f"'{ck.name}', '{ck.column or ''}', '{ck.issue_type}', _c{i}")
-    stack_expr = f"stack({n}, {', '.join(stack_args)}) as (check, column, type, fail_count)"
+    # unpivot the finished aggregate — stays distributed, no collect
+    labels = [
+        {"check": ck.name, "column": ck.column or "", "type": ck.issue_type}
+        for ck in checks
+    ]
     cols = (["partition"] if partition else []) + ["n_rows"]
-    long = wide.selectExpr(*cols, stack_expr).withColumn(
+    return unpivot(wide, cols, "_fails", labels, "fail_count").withColumn(
         "passed", F.col("fail_count") == 0
     )
-    return long
 
 
 # ---------------------------------------------------------------------------
@@ -514,11 +524,14 @@ def check_table(
                 raise TypeError(f"not a check or extension: {x!r}")
     checks = compile_table_checks(spec, extra=extra, schema=df.schema)
     # dotted column paths (nested RequiredCheck targets) are runnable
-    # when their ROOT column exists
+    # when their ROOT column exists; a column whose own name holds a
+    # dot is runnable as itself
     runnable = [
         c
         for c in checks
-        if c.column is None or c.column.split(".", 1)[0] in actual_cols
+        if c.column is None
+        or c.column in actual_cols
+        or c.column.split(".", 1)[0] in actual_cols
     ]
     partition = spec.partition_by[0] if spec.partition_by else None
 

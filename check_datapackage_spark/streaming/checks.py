@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..compile import CompiledCheck
+from ..functions import unpivot
 from ..plans.validation import violations_plan
 from ..spec import TableSpec
 
@@ -64,22 +65,17 @@ def windowed_violation_counts(
     # the cast preserves the wall-clock instant
     stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     stream = bind_check_lets(stream, checks)
-    fails = [
-        F.sum(F.when(~ck.ok, F.lit(1)).otherwise(F.lit(0))).alias(f"_c{i}")
-        for i, ck in enumerate(checks)
-    ]
+    fails = [F.sum(F.when(~ck.ok, 1).otherwise(0)) for ck in checks]
     win = (
         F.window(F.col(ts_col), window, slide) if slide else F.window(F.col(ts_col), window)
     )
     wide = (
         stream.withWatermark(ts_col, watermark)
         .groupBy(win.alias("window"))
-        .agg(*fails)
+        .agg(F.array(*fails).alias("_fails"))
     )
-    stack_args = ", ".join(f"'{ck.name}', _c{i}" for i, ck in enumerate(checks))
-    return wide.selectExpr(
-        "window", f"stack({len(checks)}, {stack_args}) as (check, fail_count)"
-    )
+    labels = [{"check": ck.name} for ck in checks]
+    return unpivot(wide, ["window"], "_fails", labels, "fail_count")
 
 
 def foreach_batch_validator(

@@ -144,8 +144,54 @@ def test_violations_plan_single_array_evaluation(spark):
     plan = violations_plan(df, checks, "t", row_key="id")._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Generate explode") == 1, plan
     assert "Filter (size(" not in plan, plan
-    # the interpreted array appears exactly once (the Generate input)
-    assert plan.count("lambdafunction") <= 2, plan
+    # the array of failing-check indices needs no lambda (codegen)
+    assert plan.count("lambdafunction") == 0, plan
+
+
+def test_array_range_ok_equals_forall_form(spark):
+    """The codegen range kernel agrees row by row with the interpreted
+    forall predicate it replaced in tokens.element_range."""
+    from check_datapackage_spark.fixtures import VOCAB
+    from check_datapackage_spark.functions import array_range_ok
+
+    cases = [
+        None, [], [None], [1, None, 2], [None, -1], [0], [VOCAB - 1],
+        [VOCAB], [-1], [0, VOCAB - 1, VOCAB], [-(2**31)], [2**31 - 1],
+    ]
+    df = spark.createDataFrame([(i, a) for i, a in enumerate(cases)], "i int, t array<int>")
+    t = F.col("t")
+    forall = t.isNull() | F.forall(t, lambda x: x.isNotNull() & (x >= 0) & (x < VOCAB))
+    rows = df.select(
+        "i", forall.alias("want"), array_range_ok(t, 0, VOCAB - 1).alias("got")
+    ).collect()
+    assert len(rows) == len(cases)
+    for r in rows:
+        assert r["got"] is r["want"], (cases[r["i"]], r["want"], r["got"])
+
+
+def test_sequence_checks_run_in_codegen(spark, tmp_path):
+    """check_table on the sequence spec + token invariants: the fused
+    Generate sits inside a whole-stage-codegen span (``*(n)``) and
+    neither the violations nor the summary plan holds an interpreted
+    lambda."""
+    import re
+
+    from check_datapackage_spark import check_table
+    from check_datapackage_spark.fixtures import (
+        allowed_sources_df, sequences_df, sequences_spec, token_invariant_checks)
+
+    sequences_df(spark, 40, partitions=2).write.parquet(str(tmp_path / "seq"))
+    df = spark.read.parquet(str(tmp_path / "seq"))
+    res = check_table(
+        df, sequences_spec(), dims={"allowed_sources": allowed_sources_df(spark)},
+        extra_checks=token_invariant_checks(),
+    )
+    res.violations.collect()
+    res.summary.collect()
+    vplan, splan = plan_of(res.violations), plan_of(res.summary)
+    assert re.search(r"\*\(\d+\) Generate explode\(array_remove", vplan), vplan
+    assert "lambdafunction" not in vplan, vplan
+    assert "lambdafunction" not in splan, splan
 
 
 def test_decontamination_broadcasts_benchmark_not_corpus(spark, sf_dir):

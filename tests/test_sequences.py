@@ -148,6 +148,35 @@ def test_structure_checks_in_check_table(spark):
     assert not any(rk == "5" and c == "tokens.no_interior_pad" for rk, c in got)
 
 
+def test_in_vocab_and_pads_match_lambda_forms(spark):
+    """in_vocab and the interior-PAD count keep the results of the
+    exists/filter lambdas they replaced: a null id passes in_vocab
+    (exists was NULL there), a NULL array passes both."""
+    from check_datapackage_spark.operators.sequences import structure_checks
+
+    PAD, MAX = 2, 10
+    cases = [None, [], [None], [0, None, 5], [None, 11], [0, 2, 2, 1],
+             [2, 5, 2], [2, None, 2, 1], [-1], [MAX], [MAX + 1], [-(2**31), 2**31 - 1]]
+    df = spark.createDataFrame([(i, a) for i, a in enumerate(cases)], "i int, t array<int>")
+    t = F.col("t")
+    checks = {c.name: c.ok for c in structure_checks("t", pad=PAD, max_id=MAX)}
+    first, last = F.try_element_at(t, F.lit(1)), F.try_element_at(t, F.lit(-1))
+    pads = (
+        F.size(F.filter(t, lambda x: x == F.lit(PAD)))
+        - F.coalesce((first == PAD).cast("int"), F.lit(0))
+        - F.coalesce((last == PAD).cast("int"), F.lit(0))
+    )
+    old = {
+        "t.in_vocab": t.isNull() | ~F.exists(t, lambda x: (x < 0) | (x > MAX)),
+        "t.no_interior_pad": t.isNull() | (pads <= 0),
+    }
+    for name, want in old.items():
+        for r in df.select("i", want.alias("want"), checks[name].alias("got")).collect():
+            # a NULL ok passes like TRUE (violations emit on ~ok only)
+            assert (r["got"] is not False) == (r["want"] is not False), (
+                name, cases[r["i"]], r["want"], r["got"])
+
+
 def test_structure_checks_streaming(spark, tmp_path):
     from check_datapackage_spark.operators.sequences import structure_checks
     from check_datapackage_spark.streaming.checks import streaming_violations

@@ -525,10 +525,9 @@ def test_semantic_dedup_two_level_planted_pair(spark, emb):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, rows2))
 
 
-def test_md5_head8_int64_matches_hashlib():
-    """The vectorized single-block MD5 behind minhash signatures must be
-    bit-identical to hashlib on every length, including the 55/56-byte
-    single-vs-multi-block boundary and empty input."""
+def _md5_cases():
+    """Random messages of every length plus the 55/56-byte boundary and
+    empty input, with hashlib's values."""
     import hashlib
 
     import numpy as np
@@ -543,5 +542,23 @@ def test_md5_head8_int64_matches_hashlib():
         int.from_bytes(hashlib.md5(m).digest()[:8], "little", signed=True)
         for m in msgs
     ]
+    return msgs, want
+
+
+def test_md5_head8_int64_matches_hashlib():
+    """The vectorized single-block MD5 behind minhash signatures must be
+    bit-identical to hashlib on every length, including the 55/56-byte
+    single-vs-multi-block boundary and empty input."""
+    msgs, want = _md5_cases()
     got = text.md5_head8_int64(msgs)
     assert list(got) == want
+
+
+def test_md5_head8_int64_big_endian_host(monkeypatch):
+    """On a big-endian host the native-order word views would be wrong,
+    so every message takes the hashlib path — same values."""
+    import sys
+
+    monkeypatch.setattr(sys, "byteorder", "big")
+    msgs, want = _md5_cases()
+    assert list(text.md5_head8_int64(msgs)) == want

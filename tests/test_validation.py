@@ -198,3 +198,42 @@ def test_exclusion_prunes_check_from_plan(spark, bad):
     res = run_check(spark, df, config=cfg)
     assert res.violations.where(F.col("type") == "pattern").count() == 0
     assert res.violations.where(F.col("type") == "required").count() == 2
+
+
+def test_odd_field_names_validate_and_profile(spark):
+    """Field names are data, never SQL text: quotes, backticks, dots,
+    brackets and unicode run through check_table (fused scan, summary
+    unpivot) and the column profile."""
+    from check_datapackage_spark import TableSpec
+    from check_datapackage_spark.operators import stats
+
+    names = ["o'k", "a`b", "x.y", "p[0]", "ünï"]
+    df = spark.createDataFrame(
+        [(1, 5, 5, 5, 5, 5), (2, None, -1, None, -1, None)],
+        "id int, " + ", ".join(f"c{i} int" for i in range(len(names))),
+    ).toDF("id", *names)
+    spec = TableSpec.from_dict({"name": "t", "schema": {
+        "primaryKey": ["id"],
+        "fields": [{"name": "id", "type": "integer"}] + [
+            {"name": n, "type": "integer",
+             "constraints": {"required": True, "minimum": 0}}
+            for n in names
+        ]}})
+    res = check_table(df, spec)
+    fails = {r["check"]: r["fail_count"] for r in res.summary.collect()}
+    assert fails == {
+        **{f"{n}.required": int(i % 2 == 0) for i, n in enumerate(names)},
+        **{f"{n}.minimum": int(i % 2 == 1) for i, n in enumerate(names)},
+    }
+    got = {(r["jsonpath"], r["check"]) for r in res.violations.collect()}
+    assert got == {
+        (f"$.t[2].{n}", f"{n}.{'required' if i % 2 == 0 else 'minimum'}")
+        for i, n in enumerate(names)
+    }
+
+    (prof,) = stats.profile(df, names).collect()
+    for i, n in enumerate(names):
+        assert prof[f"{n}__n_null"] == int(i % 2 == 0)
+        assert prof[f"{n}__min"] == (5 if i % 2 == 0 else -1)
+    nulls = {r["column"]: r["n_null"] for r in stats.null_rates(df, names).collect()}
+    assert nulls == {n: int(i % 2 == 0) for i, n in enumerate(names)}
